@@ -11,6 +11,18 @@ lineage is cut with ``checkpoint()`` every ``checkpoint_interval`` rounds
 (without it the plan doubles per iteration and the driver OOMs planning, the
 classic iterative-DataFrame failure at scale).
 
+Before the loop, each input partition contracts its own edges to stars
+(``local_star_contract``: vertex → min member of its partition-local
+component).  The stars are materialized once as the seed label table
+``vertex → min(roots)``, and the same job counts the vertices that received
+more than one distinct root.  When that count is 0 the seed IS the fixpoint
+and no round runs (``iterations == 0``): every partition's root is the min of
+its partition component, and partition components that overlap share a
+vertex and hence a root, so all of a global component carries one root — the
+root of the partition component holding the global min, i.e. that min.
+Only when some vertex got two roots does the loop run, starting from the
+seed labels instead of each vertex's own id.
+
 Complexity: O(diameter) rounds, each a self-join shuffle on the vertex id.
 For web-scale alias graphs the diameter is small (entity clusters are
 near-cliques); ``max_iterations`` bounds the pathological chain case and is
@@ -264,6 +276,36 @@ def local_star_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
     )
 
 
+def _contracted_seed(
+    edges: DataFrame, src: str, dst: str, use_local_checkpoint: bool
+) -> tuple[DataFrame, int]:
+    """Materialize the contracted stars once as ``(id, roots, component)``.
+
+    ``roots`` holds every distinct root the partitions gave the vertex and
+    ``component`` is their min.  Returns the seed and the number of vertices
+    with more than one root, counted in the materializing job itself
+    (observe → eager localCheckpoint, as in the loop)."""
+    seed = (
+        local_star_contract(edges, src, dst)
+        .groupBy(F.col(src).alias("id"))
+        .agg(F.collect_set(dst).alias("roots"))
+        .withColumn("component", F.array_min("roots"))
+    )
+    split = F.size("roots") > 1
+    if use_local_checkpoint:
+        obs = Observation("cc_seed_split")
+        seed = seed.observe(
+            obs, F.sum(split.cast("long")).alias("split")
+        ).localCheckpoint(eager=True)
+        try:
+            return seed, int(_observation_result(obs)["split"] or 0)
+        except Exception:
+            pass  # metrics missing (see the loop): count explicitly below
+    else:
+        seed = seed.persist()
+    return seed, seed.filter(split).count()
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -296,17 +338,35 @@ def connected_components(
     Per-round wall times feed a ``BatchPerformanceTracker`` (reference
     ``Export/Types.fs:140-216``) — ``round_timings["performance_trend"]``
     classifies constant/linear/exponential drift across rounds.
+
+    With ``pre_contract`` (the default) the partition-local stars seed the
+    labels, and when no vertex received two different roots the seed is
+    returned as the fixpoint: ``iterations == 0``, ``converged`` and an
+    empty round tracker, with no loop (module docstring).  Without
+    ``pre_contract`` every vertex starts from its own id.
     """
     import time as _time
 
     from neo4j_export_tool_spark.plans.perf import BatchPerformanceTracker
 
+    tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
+    seed = None
     if pre_contract:
-        edges = local_star_contract(edges, src, dst)
-    sym = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+        seed, split = _contracted_seed(edges, src, dst, use_local_checkpoint)
+        if split == 0:
+            return CCResult(
+                components=seed.select("id", "component"),
+                iterations=0,
+                converged=True,
+                round_timings=tracker.metrics(),
+            )
+        # the seed keeps every root a vertex received: exploding them gives
+        # back the distinct star edges without re-running the input plan
+        pairs = seed.select(F.col("id").alias("a"), F.explode("roots").alias("b"))
+    else:
+        pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    sym = pairs.unionByName(
+        pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
     sym = sym.persist()
     n_edges = sym.count()  # materializes the persist; sizes the loop
@@ -344,14 +404,16 @@ def connected_components(
         if session_parts is not None and rows_per_loop_partition is not None
         else None
     )
-    tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
-
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    ).persist()
-    cached = labels  # handle to the DataFrame actually persisted
+    if seed is None:
+        labels = (
+            sym.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id"))
+        ).persist()
+        cached = labels  # handle to the DataFrame actually persisted
+    else:
+        cached = seed
+        labels = seed.select("id", "component")
 
     iterations = 0
     converged = False

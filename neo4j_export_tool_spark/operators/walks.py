@@ -126,6 +126,13 @@ def random_walks(
     (`_BROADCAST_EDGES_MAX_ROWS`), the per-step joins broadcast it (and
     the walk-sized pick table) instead of shuffling — same rows, decided
     from a measured count.
+
+    Eager at call time: in the default mode (``use_local_checkpoint=True``)
+    with ``walk_len > 1`` the call runs two Spark count jobs before it
+    returns — they materialize the checkpointed edge table and start
+    frontier and decide the broadcast tiers.  The walk steps run when the
+    result is first used.  ``use_local_checkpoint=False`` or
+    ``walk_len == 1`` runs no job at call time.
     """
     if walk_len < 1:
         raise ValueError("walk_len must be >= 1")
@@ -263,6 +270,13 @@ def node2vec_walks(
     Reference: the walk corpus feeds the same embedding-training surface
     as ``random_walks``; see module docstring for the determinism
     convention shared with ``negative_samples``.
+
+    Eager at call time: in the default mode (``use_local_checkpoint=True``)
+    with ``walk_len > 1`` the call runs two Spark count jobs before it
+    returns — they materialize the checkpointed edge table and start
+    frontier and decide the broadcast tiers.  The walk steps run when the
+    result is first used.  ``use_local_checkpoint=False`` or
+    ``walk_len == 1`` runs no job at call time.
     """
     if walk_len < 1:
         raise ValueError("walk_len must be >= 1")

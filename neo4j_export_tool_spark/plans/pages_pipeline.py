@@ -18,9 +18,11 @@ templates, canonicalization threshold), so a resumed run with different
 input or pipeline config invalidates the affected stages instead of
 silently reusing them.
 
-Metrics per stage: row count, wall seconds, per-partition row counts —
-written into the ledger entry (the Spark analog of the reference's per-label
-stats + batch-timing trackers, ``Export/Types.fs:140-216``).
+Metrics per stage: row count, wall seconds, per-file row counts from parquet
+footers (no Spark job) — written into the ledger entry (the Spark analog of
+the reference's per-label stats + batch-timing trackers,
+``Export/Types.fs:140-216``).  Entries are written to a temp file and renamed
+into place; an entry that does not parse counts as not done.
 """
 
 from __future__ import annotations
@@ -68,10 +70,12 @@ class StageLedger:
         return os.path.join(self.work_dir, "stages", stage)
 
     def read(self, stage: str) -> dict[str, Any] | None:
+        """The stage's entry, or None when it is missing or unreadable (an
+        entry torn by a crash counts as not done, so the stage re-runs)."""
         try:
             with open(self._entry_path(stage), encoding="utf-8") as f:
                 return json.load(f)
-        except FileNotFoundError:
+        except (FileNotFoundError, ValueError):  # JSONDecodeError included
             return None
 
     def is_done(self, stage: str, fingerprint: str) -> bool:
@@ -83,9 +87,14 @@ class StageLedger:
         )
 
     def mark_done(self, stage: str, fingerprint: str, metrics: dict[str, Any]) -> None:
-        os.makedirs(os.path.dirname(self._entry_path(stage)), exist_ok=True)
-        with open(self._entry_path(stage), "w", encoding="utf-8") as f:
+        # write-then-rename: a crash mid-write leaves the old entry (or none)
+        # in place, never a torn one
+        path = self._entry_path(stage)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        tmp = f"{path}.{os.getpid()}.tmp"
+        with open(tmp, "w", encoding="utf-8") as f:
             json.dump({"fingerprint": fingerprint, "metrics": metrics}, f, indent=1)
+        os.replace(tmp, path)
 
     def invalidate(self, stage: str) -> None:
         try:
@@ -94,14 +103,19 @@ class StageLedger:
             pass
 
 
-def _partition_counts(df: DataFrame) -> list[int]:
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .count()
-        .orderBy("pid")
-        .collect()
+def _file_row_counts(path: str) -> list[int]:
+    """Row count of every parquet part file under ``path`` (partition
+    subdirectories included), in file-path order, read from the footers —
+    no Spark job."""
+    import pyarrow.parquet as pq
+
+    files = sorted(
+        os.path.join(root, name)
+        for root, _, names in os.walk(path)
+        for name in names
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
     )
-    return [r["count"] for r in rows]
+    return [pq.read_metadata(f).num_rows for f in files]
 
 
 @dataclass
@@ -176,16 +190,16 @@ class PagesPipeline:
         if partition_by:
             writer = writer.partitionBy(partition_by)
         writer.parquet(out)
-        materialized = self.spark.read.parquet(out)
+        file_rows = _file_row_counts(out)
         metrics = {
-            "rows": materialized.count(),
+            "rows": sum(file_rows),
             "seconds": round(time.perf_counter() - t0, 3),
-            "partition_rows": _partition_counts(materialized),
+            "partition_rows": file_rows,
         }
         self.ledger.mark_done(stage, fingerprint, metrics)
         self.result.stages_run.append(stage)
         self.result.metrics[stage] = metrics
-        return materialized
+        return self.spark.read.parquet(out)
 
     # -- stages ---------------------------------------------------------------
 

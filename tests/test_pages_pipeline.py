@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -57,6 +58,15 @@ def test_all_stages_ran(first_run):
     for stage, m in first_run.metrics.items():
         assert m["rows"] > 0, stage
         assert sum(m["partition_rows"]) == m["rows"]
+
+
+def test_ledger_rows_match_stage_parquet(spark, work_dir, first_run):
+    """The footer row counts in the ledger are the stage outputs' real row
+    counts, not just self-consistent per-file sums."""
+    for stage, m in first_run.metrics.items():
+        if stage == "export":  # JSONL, checked against its metadata below
+            continue
+        assert m["rows"] == spark.read.parquet(f"{work_dir}/stages/{stage}").count(), stage
 
 
 def test_triple_pr_vs_planted_oracle(spark, first_run, work_dir):
@@ -114,6 +124,43 @@ def test_resume_skips_completed_stages(spark, work_dir, first_run):
     res = pipe.run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
     assert res.stages_run == []
     assert len(res.stages_skipped) == 8
+
+
+def _record_lines(path: str) -> list[str]:
+    """Export record lines (metadata line dropped), ``export_id`` masked."""
+    with open(path, encoding="utf-8") as f:
+        export_id = json.loads(f.readline())["export_metadata"]["export_id"]
+        return [line.replace(export_id, "<export_id>") for line in f]
+
+
+def test_torn_ledger_entry_reruns_only_that_stage(spark, work_dir, first_run):
+    """A ledger entry cut short by a crash counts as not done: the resume
+    re-runs exactly that stage and the export stays the same."""
+    pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
+
+    def run():
+        return PagesPipeline(
+            spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
+        ).run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
+
+    run()  # re-baseline the ledger on the canonical run
+    ledger = StageLedger(work_dir)
+    export_file = ledger.read("export")["metrics"]["file"]
+    lines_before = _record_lines(export_file)
+    link_rows = lambda: Counter(  # noqa: E731
+        tuple(r) for r in spark.read.parquet(ledger.output_path("link")).collect()
+    )
+    link_before = link_rows()
+    entry = os.path.join(work_dir, "_ledger", "link.json")
+    with open(entry, "r+", encoding="utf-8") as f:
+        f.truncate(os.path.getsize(entry) // 2)
+    assert ledger.read("link") is None
+
+    res = run()
+    assert res.stages_run == ["link"]
+    assert ledger.read("link") is not None
+    assert link_rows() == link_before
+    assert _record_lines(export_file) == lines_before
 
 
 def test_invalidated_stage_recomputes(spark, work_dir, first_run):
