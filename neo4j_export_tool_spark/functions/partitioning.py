@@ -101,10 +101,10 @@ def broadcast_if_small(n_rows: int, ceiling: int):
     `_pagerank_loop` keeps an inline ternary, because it receives the
     decision as a bool across a function boundary, not a count): returns
     ``F.broadcast`` when the measured ``n_rows`` is at or under ``ceiling``,
-    else the identity — so loop tables hidden behind
-    localCheckpoint/persist barriers (whose size statistics the planner
-    cannot see, guide §3.1) are broadcast exactly while they fit and
-    keep the scale-safe shuffle shape above the ceiling.  Callers pass
+    else the identity — so loop tables hidden behind localCheckpoint
+    barriers (whose size statistics the planner cannot see, guide §3.1)
+    are broadcast exactly while they fit and keep the scale-safe
+    shuffle shape above the ceiling.  Callers pass
     a count they already took (or that materializes a barrier the loop
     pays for anyway); the choice is physical only — results must be
     partitioning-independent, which each caller pins with a

@@ -21,8 +21,9 @@ is float (per-node sorted fold, bit-stable).
 Scale shape per hop: registers ⋈ edges (shuffle keyed by node) + one
 (node, bucket) max agg; localCheckpoint lineage cuts.  Total state =
 Σ_v min(|ball(v,h)|, 2^p) rows — the fixed-size-sketch guarantee that
-makes ANF feasible where exact closure is not (`transitive_closure`
-materializes every PAIR; this materializes 2^p registers per node).
+makes ANF feasible where an exact transitive closure is not (the
+closure materializes every PAIR; this materializes 2^p registers per
+node).
 """
 
 from __future__ import annotations
@@ -54,7 +55,6 @@ def neighborhood_function(
     h: int = 4,
     p: int = 8,
     salt: str = "anf",
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, hop, ball_size) for hop in [0, h]: the estimated number
     of distinct nodes within ``hop`` hops of ``node`` (itself
@@ -80,30 +80,12 @@ def neighborhood_function(
         )
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
+        .localCheckpoint(eager=False)
     )
-    def _mat(df):
-        # The no-checkpoint fallback MUST still materialize: each hop's
-        # register table is consumed three times (propagation join, union,
-        # estimate), so pure lineage — random_walks' posture, whose frames
-        # are referenced once — would recompute ~3^h subtrees.  persist()
-        # frames cannot be unpersisted from inside this lazy function
-        # (r6 advice item), but they are bounded at h+2 per call and the
-        # ContextCleaner releases them once the returned plan drops its
-        # references — a transient cost, not a session-lifetime leak.
-        return (
-            df.localCheckpoint(eager=False)
-            if use_local_checkpoint
-            else df.persist()
-        )
-
-    e = _mat(e)
     _be = lambda df: df
     if h >= 1:
-        # the tier count runs in BOTH materialization modes (persist's
-        # post-materialization statistics are not something the planner
-        # is guaranteed to exploit for the per-hop join), so the
-        # function is eager whenever the hop loop will run: the count
-        # materializes e — the job hop 1 would otherwise trigger.
+        # the function is eager whenever the hop loop will run: the tier
+        # count materializes e — the job hop 1 would otherwise trigger.
         # h == 0 skips it and stays lazy.
         _be = broadcast_if_small(e.count(), _BROADCAST_EDGES_MAX_ROWS)
     nodes = (
@@ -114,11 +96,12 @@ def neighborhood_function(
     # seed: every node's sketch contains exactly itself (the shared
     # sketches.py register math, applied to the node id)
     bucket, rho = register_cols(F.col("node"), p, salt)
-    regs = _mat(
-        nodes.select(
-            "node", bucket.alias("bucket"), rho.alias("max_rho")
-        )
-    )
+    # each hop's register table is consumed three times (propagation
+    # join, union, estimate), so every frame is checkpointed where it is
+    # computed; pure lineage would recompute ~3^h subtrees
+    regs = nodes.select(
+        "node", bucket.alias("bucket"), rho.alias("max_rho")
+    ).localCheckpoint(eager=False)
 
     def _estimates(r: DataFrame, hop: int) -> DataFrame:
         agg = r.groupBy("node").agg(
@@ -141,10 +124,11 @@ def neighborhood_function(
             regs.join(_be(e), regs["node"] == e["dst"])
             .select(F.col("src").alias("node"), "bucket", "max_rho")
         )
-        regs = _mat(
+        regs = (
             regs.unionByName(pushed)
             .groupBy("node", "bucket")
             .agg(F.max("max_rho").alias("max_rho"))
+            .localCheckpoint(eager=False)
         )
         per_hop.append(_estimates(regs, hop))
     out = per_hop[0]

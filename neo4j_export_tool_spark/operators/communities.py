@@ -31,11 +31,11 @@ from pyspark.sql import functions as F
 
 from neo4j_export_tool_spark.functions.partitioning import broadcast_if_small
 
-# Symmetrized-edge ceiling for broadcasting the per-round label table
-# (see the block comment in `label_propagation`; a label row is two
-# short strings, so 500k rows ≈ the session's 64 MB auto-broadcast
-# threshold — `operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).
-_BROADCAST_SYM_EDGES_MAX = 500_000
+# Node ceiling for broadcasting the per-round label table (see the
+# block comment in `label_propagation`; a label row is two short
+# strings, so 500k rows ≈ the session's 64 MB auto-broadcast threshold
+# — `operators/pagerank.py::_BROADCAST_RANKS_MAX_NODES`).
+_BROADCAST_LABELS_MAX = 500_000
 
 
 def label_propagation(
@@ -43,7 +43,6 @@ def label_propagation(
     a_col: str,
     b_col: str,
     n_iters: int = 5,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, community) after ``n_iters`` synchronous LPA rounds on the
     undirected simple graph.  Edges are canonicalized (least, greatest)
@@ -63,27 +62,26 @@ def label_propagation(
     )
     sym = und.unionByName(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    # Broadcast the per-round (node, label) table when the symmetrized
-    # edge table is small (labels ≤ distinct sources ≤ |sym|): behind
-    # the localCheckpoint boundary the planner has no size statistics
-    # and shuffle-joins even tiny graphs (guide §3.1; the pagerank /
-    # walks convention).  The count materializes the checkpoint the
-    # first round would pay for anyway; results are identical (the
-    # vote fold is a min, partitioning-independent).
-    _bl = lambda df: df
-    if use_local_checkpoint:
-        sym = sym.localCheckpoint(eager=False)
-        if n_iters >= 1:  # n_iters == 0: the loop never runs
-            _bl = broadcast_if_small(sym.count(), _BROADCAST_SYM_EDGES_MAX)
-
+    ).localCheckpoint(eager=False)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("community"))
     )
-    for _ in range(n_iters):
-        if use_local_checkpoint:
+    # Broadcast the per-round (node, label) table while it fits, decided
+    # from its own row count (one row per distinct node): behind the
+    # localCheckpoint boundary the planner has no size statistics and
+    # shuffle-joins even tiny graphs (guide §3.1; the pagerank / walks
+    # convention).  The count is the one job that materializes both
+    # checkpoints the first round reads; results are identical (the vote
+    # fold is a min, partitioning-independent).  n_iters == 0: the loop
+    # never runs, so nothing is materialized.
+    _bl = lambda df: df
+    if n_iters >= 1:
+        labels = labels.localCheckpoint(eager=False)
+        _bl = broadcast_if_small(labels.count(), _BROADCAST_LABELS_MAX)
+    for i in range(n_iters):
+        if i:
             labels = labels.localCheckpoint(eager=False)
         neigh = sym.join(
             _bl(labels.withColumnRenamed("node", "b")), "b"

@@ -6,10 +6,11 @@ GraphFrames dependency — plain DataFrame min-label propagation:
 
     comp(v) ← min(comp(v), min over neighbors u of comp(u))
 
-iterated to fixpoint.  Convergence is detected with a changed-label count;
-lineage is cut with ``checkpoint()`` every ``checkpoint_interval`` rounds
-(without it the plan doubles per iteration and the driver OOMs planning, the
-classic iterative-DataFrame failure at scale).
+iterated to fixpoint.  Every round ends in an eager ``localCheckpoint``
+whose job also counts the changed labels (``observe``), so convergence costs
+no extra job and lineage is cut each round (without it the plan doubles per
+iteration and the driver OOMs planning, the classic iterative-DataFrame
+failure at scale).
 
 Before the loop, each input partition contracts its own edges to stars
 (``local_star_contract``: vertex → min member of its partition-local
@@ -277,7 +278,7 @@ def local_star_contract(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def _contracted_seed(
-    edges: DataFrame, src: str, dst: str, use_local_checkpoint: bool
+    edges: DataFrame, src: str, dst: str
 ) -> tuple[DataFrame, int]:
     """Materialize the contracted stars once as ``(id, roots, component)``.
 
@@ -292,18 +293,15 @@ def _contracted_seed(
         .withColumn("component", F.array_min("roots"))
     )
     split = F.size("roots") > 1
-    if use_local_checkpoint:
-        obs = Observation("cc_seed_split")
-        seed = seed.observe(
-            obs, F.sum(split.cast("long")).alias("split")
-        ).localCheckpoint(eager=True)
-        try:
-            return seed, int(_observation_result(obs)["split"] or 0)
-        except Exception:
-            pass  # metrics missing (see the loop): count explicitly below
-    else:
-        seed = seed.persist()
-    return seed, seed.filter(split).count()
+    obs = Observation("cc_seed_split")
+    seed = seed.observe(
+        obs, F.sum(split.cast("long")).alias("split")
+    ).localCheckpoint(eager=True)
+    try:
+        return seed, int(_observation_result(obs)["split"] or 0)
+    except Exception:
+        # metrics missing (see the loop): count explicitly
+        return seed, seed.filter(split).count()
 
 
 def connected_components(
@@ -311,22 +309,18 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 20,
-    checkpoint_interval: int = 3,
-    use_local_checkpoint: bool = True,
     rows_per_loop_partition: int | None = 500_000,
     pointer_double_hops: int = 2,
-    pre_contract: bool = True,
 ) -> CCResult:
     """Min-label propagation over an undirected edge list.
 
     ``edges``: two columns of the same orderable type.  Vertices appearing
     only as isolated endpoints keep their own id as component.
 
-    ``use_local_checkpoint=True`` truncates lineage EVERY round with an
-    eager localCheckpoint — without it the logical plan doubles per round
-    and driver-side planning dominates wall time long before data does.
-    Set False on clusters that need executor-loss tolerance: then a reliable
-    ``checkpoint()`` runs every ``checkpoint_interval`` rounds instead.
+    Lineage is truncated EVERY round with an eager localCheckpoint —
+    without it the logical plan doubles per round and driver-side planning
+    dominates wall time long before data does.  Checkpoint blocks live on
+    the executors, so losing one mid-loop fails the job; rerun the stage.
 
     Loop parallelism is size-adaptive: each round is 3 shuffles, so a small
     graph on many shuffle partitions pays ~rounds×3×partitions empty-task
@@ -339,32 +333,28 @@ def connected_components(
     ``Export/Types.fs:140-216``) — ``round_timings["performance_trend"]``
     classifies constant/linear/exponential drift across rounds.
 
-    With ``pre_contract`` (the default) the partition-local stars seed the
-    labels, and when no vertex received two different roots the seed is
-    returned as the fixpoint: ``iterations == 0``, ``converged`` and an
-    empty round tracker, with no loop (module docstring).  Without
-    ``pre_contract`` every vertex starts from its own id.
+    The partition-local stars seed the labels, and when no vertex
+    received two different roots the seed is returned as the fixpoint:
+    ``iterations == 0``, ``converged`` and an empty round tracker, with no
+    loop (module docstring).
     """
     import time as _time
 
     from neo4j_export_tool_spark.plans.perf import BatchPerformanceTracker
 
     tracker = BatchPerformanceTracker(strategy="label_propagation", sample_every=1)
-    seed = None
-    if pre_contract:
-        seed, split = _contracted_seed(edges, src, dst, use_local_checkpoint)
-        if split == 0:
-            return CCResult(
-                components=seed.select("id", "component"),
-                iterations=0,
-                converged=True,
-                round_timings=tracker.metrics(),
-            )
-        # the seed keeps every root a vertex received: exploding them gives
-        # back the distinct star edges without re-running the input plan
-        pairs = seed.select(F.col("id").alias("a"), F.explode("roots").alias("b"))
-    else:
-        pairs = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    seed, split = _contracted_seed(edges, src, dst)
+    labels = seed.select("id", "component")
+    if split == 0:
+        return CCResult(
+            components=labels,
+            iterations=0,
+            converged=True,
+            round_timings=tracker.metrics(),
+        )
+    # the seed keeps every root a vertex received: exploding them gives
+    # back the distinct star edges without re-running the input plan
+    pairs = seed.select(F.col("id").alias("a"), F.explode("roots").alias("b"))
     sym = pairs.unionByName(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
@@ -404,16 +394,6 @@ def connected_components(
         if session_parts is not None and rows_per_loop_partition is not None
         else None
     )
-    if seed is None:
-        labels = (
-            sym.select(F.col("a").alias("id"))
-            .distinct()
-            .withColumn("component", F.col("id"))
-        ).persist()
-        cached = labels  # handle to the DataFrame actually persisted
-    else:
-        cached = seed
-        labels = seed.select("id", "component")
 
     iterations = 0
     converged = False
@@ -467,42 +447,23 @@ def connected_components(
                         ).alias("_changed"),
                     )
                 )
-            if use_local_checkpoint:
-                # convergence count rides the SAME job as the checkpoint
-                # materialization (observe → eager localCheckpoint): one job
-                # per round, and the changed-count is free EVERY round, so
-                # the loop stops at the earliest possible round — no
-                # throttling needed (round-2 verdict item #3)
-                obs = Observation(f"cc_changed_r{i}")
-                observed = new_labels.observe(
-                    obs, F.sum(F.col("_changed").cast("long")).alias("changed")
-                )
-                new_labels = observed.localCheckpoint(eager=True)
-                try:
-                    changed = int(_observation_result(obs)["changed"] or 0)
-                except Exception:
-                    # CollectMetrics can be optimized away on a degenerate
-                    # (empty) plan, or (bounded-wait timeout) the metrics
-                    # event never arrived — fall back to an explicit count
-                    changed = new_labels.filter(F.col("_changed")).count()
-            else:
-                if checkpoint_interval and (i + 1) % checkpoint_interval == 0:
-                    new_labels = new_labels.checkpoint(eager=True)
-                else:
-                    new_labels = new_labels.persist()
-                # reliable-checkpoint path: counts are separate jobs, so keep
-                # the throttle (rounds 1-2 always change on a non-trivial
-                # graph; pointer doubling converges in O(log n) rounds)
-                check = (i + 1) >= 3 and (i + 1) % 2 == 1 or (
-                    i + 1
-                ) == max_iterations
-                changed = (
-                    new_labels.filter(F.col("_changed")).count() if check else -1
-                )
-            # unpersist the handle that was actually cached (a derived plan like
-            # .drop() is a different DataFrame and its unpersist is a no-op)
-            cached.unpersist()
-            cached = new_labels
+            # convergence count rides the SAME job as the checkpoint
+            # materialization (observe → eager localCheckpoint): one job
+            # per round, and the changed-count is free EVERY round, so
+            # the loop stops at the earliest possible round — no
+            # throttling needed (round-2 verdict item #3)
+            obs = Observation(f"cc_changed_r{i}")
+            observed = new_labels.observe(
+                obs, F.sum(F.col("_changed").cast("long")).alias("changed")
+            )
+            new_labels = observed.localCheckpoint(eager=True)
+            try:
+                changed = int(_observation_result(obs)["changed"] or 0)
+            except Exception:
+                # CollectMetrics can be optimized away on a degenerate
+                # (empty) plan, or (bounded-wait timeout) the metrics
+                # event never arrived — fall back to an explicit count
+                changed = new_labels.filter(F.col("_changed")).count()
             labels = new_labels.drop("_changed")
             tracker.record_batch((_time.perf_counter() - _t0) * 1000.0)
             if changed == 0:

@@ -4,17 +4,16 @@ allocation) that KG-completion pipelines use to propose candidate
 edges (Liben-Nowell & Kleinberg, CIKM 2003; Adamic & Adar 2003).
 
 Complements the derived-graph stack (`operators/triangles.py`,
-`operators/kcore.py`, `operators/communities.py`): the candidate pair
-set here IS the wedge set of the triangle counter — two nodes sharing
-at least one common neighbor — produced by the same degree-bounded
-self-join, never an all-pairs product.
+`operators/communities.py`): the candidate pair set here IS the wedge
+set of the triangle counter — two nodes sharing at least one common
+neighbor — produced by the same degree-bounded self-join, never an
+all-pairs product.
 
 Scale shape: one canonicalized edge dedup, one degree agg, one
 wedge self-join on the center node (the only quadratic term —
 Σ deg(w)² over centers, the same cost law as triangle counting; the
 ``max_center_degree`` ceiling RAISES on hub centers rather than
-silently truncating scores, the closure/`max_pairs` convention), one
-(pair)-keyed agg, two degree joins.  All shuffles are equi-joins /
+silently truncating scores), one (pair)-keyed agg, two degree joins.  All shuffles are equi-joins /
 keyed aggs; AQE decides the physical strategy.
 
 Float determinism: Adamic-Adar and resource allocation sum doubles, so

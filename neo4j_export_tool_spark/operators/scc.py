@@ -1,10 +1,9 @@
 """Strongly connected components via deterministic min-label coloring.
 
 The directed sibling of `operators/components.py` (weakly connected):
-SCCs are what make a KG hierarchy cyclic — `operators/closure.py`
-RAISES on a cycle-heavy graph; this operator is how a user finds the
-cycles to fix.  Algorithm: the coloring method (Orzan 2004 — the
-standard distributed SCC scheme; FW-BW's recursive pivoting doesn't
+SCCs are what make a KG hierarchy cyclic; this operator is how a user
+finds the cycles to fix.  Algorithm: the coloring method (Orzan 2004 —
+the standard distributed SCC scheme; FW-BW's recursive pivoting doesn't
 map to a driver loop):
 
   outer round:
@@ -24,10 +23,10 @@ Scale shape: every step is an equi-join + keyed min-agg fixpoint with
 localCheckpoint lineage cuts (the CC/PageRank discipline).  Forward
 rounds are bounded by the color diameter, outer rounds by the SCC
 condensation's chain structure; both carry RAISING ceilings
-(`max_label_rounds`, `max_outer_rounds`) — the closure convention:
-explicit cost ceilings, never silent truncation.  Worst case (one long
-path) is O(diameter) rounds — the known cost of label-propagation SCC;
-for that shape raise the ceilings deliberately.
+(`max_label_rounds`, `max_outer_rounds`): explicit cost ceilings,
+never silent truncation.  Worst case (one long path) is O(diameter)
+rounds — the known cost of label-propagation SCC; for that shape raise
+the ceilings deliberately.
 
 Independent python twin: iterative Tarjan in tests/test_scc.py.
 """
@@ -58,7 +57,6 @@ def strongly_connected_components(
     dst_col: str,
     max_outer_rounds: int = 32,
     max_label_rounds: int = 64,
-    use_local_checkpoint: bool = True,
 ) -> DataFrame:
     """(node, scc_id) — scc_id is the minimum node id of the component.
 
@@ -89,7 +87,7 @@ def strongly_connected_components(
     )
 
     def _ckpt(df):
-        return df.localCheckpoint(eager=False) if use_local_checkpoint else df
+        return df.localCheckpoint(eager=False)
 
     e_all = _ckpt(e_all)
     nodes = _ckpt(nodes_all)
@@ -98,19 +96,11 @@ def strongly_connected_components(
     assigned = spark.createDataFrame([], "node string, scc_id string")
 
     for _ in range(max_outer_rounds):
-        if use_local_checkpoint:
-            # count (not isEmpty): on the materialized checkpoint both
-            # are one cheap job, and the measured node count decides the
-            # broadcast tier for this outer round
-            n_nodes = nodes.count()
-            _bn = broadcast_if_small(n_nodes, _BROADCAST_NODES_MAX)
-        else:
-            # pure-lineage debug mode: isEmpty short-circuits after one
-            # row where a count would recompute the whole surviving
-            # subgraph; no checkpoint boundary means the planner sees
-            # sizes itself, so no forced tier either
-            n_nodes = 0 if nodes.isEmpty() else 1
-            _bn = lambda df: df
+        # count (not isEmpty): on the materialized checkpoint both are
+        # one cheap job, and the measured node count decides the
+        # broadcast tier for this outer round
+        n_nodes = nodes.count()
+        _bn = broadcast_if_small(n_nodes, _BROADCAST_NODES_MAX)
         if n_nodes == 0:
             return assigned
         # 0. TRIM: a node with no in-edge or no out-edge in the
@@ -176,7 +166,7 @@ def strongly_connected_components(
             )
             # checkpoint BEFORE the moved-check: the isEmpty action
             # materializes nxt so the next round reads it instead of
-            # re-running this round's join (closure.py discipline)
+            # re-running this round's join
             nxt = _ckpt(nxt)
             moved = nxt.where(F.col("_moved")).isEmpty()
             colors = nxt.select("node", "color")

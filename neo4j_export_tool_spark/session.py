@@ -129,10 +129,4 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package(spark)
-    # iterative operators (connected components) need a checkpoint dir;
-    # default to a session-scoped temp dir unless the caller set one
-    if spark.sparkContext.getCheckpointDir() is None:
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="spark-graft-ckpt-")
-        )
     return spark

@@ -1,8 +1,6 @@
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 
@@ -17,11 +15,8 @@ def spark():
 
     cpus = min(8, os.cpu_count() or 8)
     spark = get_spark(master=f"local[{cpus}]", app_name="tests", shuffle_partitions=8)
-    ckpt = tempfile.mkdtemp(prefix="spark-ckpt-")
-    spark.sparkContext.setCheckpointDir(ckpt)
     yield spark
     spark.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

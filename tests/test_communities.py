@@ -103,6 +103,31 @@ def test_broadcast_and_shuffle_tiers_agree(spark, monkeypatch):
 
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]
     base = sorted(_spark_lpa(spark, edges, 3).items())
-    monkeypatch.setattr(C, "_BROADCAST_SYM_EDGES_MAX", -1)
+    monkeypatch.setattr(C, "_BROADCAST_LABELS_MAX", -1)
     forced = sorted(_spark_lpa(spark, edges, 3).items())
     assert base == forced
+
+
+def test_label_table_broadcast_decided_from_node_count(spark, monkeypatch):
+    """The broadcast side is the (node, label) table, so its tier follows
+    the node count: a graph with nodes <= ceiling < symmetrized edges
+    must broadcast the per-round label join.  Auto-broadcast is off so
+    only the operator's own decision can put a broadcast in the plan."""
+    import neo4j_export_tool_spark.operators.communities as C
+
+    # K4: 4 nodes, 6 undirected edges, 12 symmetrized rows
+    nodes = ["a", "b", "c", "d"]
+    edges = [(x, y) for i, x in enumerate(nodes) for y in nodes[i + 1:]]
+    df = spark.createDataFrame(edges, "a string, b string")
+    monkeypatch.setattr(C, "_BROADCAST_LABELS_MAX", len(nodes))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = label_propagation(df, "a", "b", n_iters=1)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {r.node: r.community for r in out.collect()}
+    finally:
+        spark.conf.set(key, old)
+    assert "BroadcastHashJoin" in plan
+    assert got == _py_lpa(edges, 1)
