@@ -56,8 +56,15 @@ def canonicalize_surfaces(
     """
     distinct = surfaces.select(F.col(surface_col).alias("surface")).distinct()
     pairs = surface_alias_pairs(distinct, "surface", threshold_pct)
+    # rows_per_loop_partition=None: the CC loop must not override the
+    # session-wide shuffle.partitions, because this operator runs beside
+    # other queries on the same session (PagesPipeline's side branch)
     cc = connected_components(
-        pairs, src="surface_a", dst="surface_b", max_iterations=max_iterations
+        pairs,
+        src="surface_a",
+        dst="surface_b",
+        max_iterations=max_iterations,
+        rows_per_loop_partition=None,
     )
     # component label is the min surface already (min-label propagation over
     # string ids) → representative == component

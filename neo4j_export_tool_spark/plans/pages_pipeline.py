@@ -2,11 +2,13 @@
 
 The north-star dataflow (SURVEY.md §3 'Spark lifecycle equivalent'):
 
-    pages ─extract──► text ─mentions──► mentions ─link──► linked
-                         └─triples──► triples ──────────────┤
-    surfaces ─LSH+CC──► canonical map ──────────────────────┤
-                                                            ▼
-                nodes / edges (+content hashes, J1 join) ──► parquet + JSONL
+    pages ─extract──► text ─mentions──► mentions ─link──► linked ─nodes──► nodes
+                       │                    │                                  │
+                       │                    └─canonicalize (LSH+CC)──►         │
+                       │                         canonical map (unread)        │
+                       └─triples──► triples ──────────────┐                    │
+                                                          ▼                    ▼
+                                  edges (+content hashes, J1 join) ──► JSONL export
 
 Every stage is (parquet in) → (parquet out + metrics); a completed stage is
 recorded in the ledger (``_ledger/<stage>.json`` next to the stage output)
@@ -18,11 +20,28 @@ templates, canonicalization threshold), so a resumed run with different
 input or pipeline config invalidates the affected stages instead of
 silently reusing them.
 
-Metrics per stage: row count, wall seconds, per-file row counts from parquet
-footers (no Spark job) — written into the ledger entry (the Spark analog of
-the reference's per-label stats + batch-timing trackers,
-``Export/Types.fs:140-216``).  Entries are written to a temp file and renamed
-into place; an entry that does not parse counts as not done.
+The calling thread runs the critical path extract → mentions → link →
+nodes → edges → export.  The two side branches run beside it on a
+2-thread pool: ``triples`` (needs only ``extract``; joined before
+``edges``) and ``canonicalize`` (needs only ``mentions``; joined before
+``run`` returns).  No stage reads the canonical map yet, so
+``canonicalize`` is kept off the critical path rather than deleted.  Side
+branch jobs inherit the caller's job group, local properties and tags; a
+side branch's error is raised from ``run`` at its join point.  Stages
+share one SparkSession, so no stage may change session-wide conf while it
+runs (``canonicalize_surfaces`` keeps CC's loop off
+``spark.sql.shuffle.partitions``).
+``stages_run`` and ``stages_skipped`` list stages in declared order
+(``STAGES``), whatever order they finished in.
+
+Metrics per stage: row count, wall seconds, the stage's span
+(``started_s``/``ended_s``, offsets from the start of ``run``; with the
+side branches overlapping, the stage seconds can sum past the run's wall
+time), per-file row counts from parquet footers (no Spark job) — written
+into the ledger entry (the Spark analog of the reference's per-label
+stats + batch-timing trackers, ``Export/Types.fs:140-216``).  Entries are
+written to a temp file and renamed into place, only after the stage's
+output is complete; an entry that does not parse counts as not done.
 """
 
 from __future__ import annotations
@@ -31,9 +50,11 @@ import json
 import os
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,6 +71,10 @@ from neo4j_export_tool_spark.operators.mentions import (
     build_relation_patterns,
     detect_mentions,
     extract_triples,
+)
+
+STAGES = (
+    "extract", "mentions", "triples", "canonicalize", "link", "nodes", "edges", "export",
 )
 
 
@@ -150,6 +175,7 @@ class PagesPipeline:
         self.resume = resume
         self.ledger = StageLedger(work_dir)
         self.result = PipelineResult(work_dir)
+        self._t_run = 0.0  # perf_counter at the start of run()
         # config digests folded into stage fingerprints: a resumed run with
         # a changed gazetteer/templates/thresholds must invalidate the
         # stages that consumed them, not silently reuse stale parquet
@@ -173,12 +199,24 @@ class PagesPipeline:
 
     # -- stage runner -------------------------------------------------------
 
+    def _record(
+        self, stage: str, fingerprint: str, t0: float, metrics: dict[str, Any]
+    ) -> None:
+        """Ledger entry for a stage started at ``t0`` and now complete, with
+        its wall seconds and its span as offsets from the start of ``run``."""
+        t1 = time.perf_counter()
+        metrics = {
+            **metrics,
+            "seconds": round(t1 - t0, 3),
+            "started_s": round(t0 - self._t_run, 3),
+            "ended_s": round(t1 - self._t_run, 3),
+        }
+        self.ledger.mark_done(stage, fingerprint, metrics)
+        self.result.stages_run.append(stage)
+        self.result.metrics[stage] = metrics
+
     def _run_stage(
-        self,
-        stage: str,
-        fingerprint: str,
-        compute: Callable[[], DataFrame],
-        partition_by: str | None = None,
+        self, stage: str, fingerprint: str, compute: Callable[[], DataFrame]
     ) -> DataFrame:
         out = self.ledger.output_path(stage)
         if self.resume and self.ledger.is_done(stage, fingerprint):
@@ -186,26 +224,20 @@ class PagesPipeline:
             return self.spark.read.parquet(out)
         t0 = time.perf_counter()
         df = compute()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(out)
+        df.write.mode("overwrite").parquet(out)
         file_rows = _file_row_counts(out)
-        metrics = {
-            "rows": sum(file_rows),
-            "seconds": round(time.perf_counter() - t0, 3),
-            "partition_rows": file_rows,
-        }
-        self.ledger.mark_done(stage, fingerprint, metrics)
-        self.result.stages_run.append(stage)
-        self.result.metrics[stage] = metrics
-        return self.spark.read.parquet(out)
+        self._record(
+            stage, fingerprint, t0, {"rows": sum(file_rows), "partition_rows": file_rows}
+        )
+        # the computed schema is at hand: no schema-inference job on read
+        return self.spark.read.schema(df.schema).parquet(out)
 
     # -- stages ---------------------------------------------------------------
 
     def run(self, pages: DataFrame, fingerprint: str) -> PipelineResult:
         """Run all stages. ``fingerprint``: identifies the input snapshot
         (e.g. corpus size + seed, or an Iceberg snapshot id)."""
+        self._t_run = time.perf_counter()
         fp = fingerprint
         gaz, tpl = self._gaz_digest, self._tpl_digest
         canon_threshold = 40
@@ -221,49 +253,65 @@ class PagesPipeline:
             ),
         )
 
-        mentions = self._run_stage(
-            "mentions",
-            self._stage_fp(fp, gaz),
-            lambda: detect_mentions(extracted, self.gazetteer),
-        )
+        # exiting the pool waits for both side branches, also when the
+        # critical path raises
+        with ThreadPoolExecutor(max_workers=2, thread_name_prefix="pages-side") as pool:
+            triples_future = pool.submit(inheritable_thread_target(self.spark)(
+                lambda: self._run_stage(
+                    "triples",
+                    self._stage_fp(fp, tpl),
+                    lambda: extract_triples(
+                        extracted,
+                        build_relation_patterns(self.templates, self.surfaces_by_label),
+                    ),
+                )
+            ))
 
-        triples = self._run_stage(
-            "triples",
-            self._stage_fp(fp, tpl),
-            lambda: extract_triples(
-                extracted,
-                build_relation_patterns(self.templates, self.surfaces_by_label),
-            ),
-        )
+            mentions = self._run_stage(
+                "mentions",
+                self._stage_fp(fp, gaz),
+                lambda: detect_mentions(extracted, self.gazetteer),
+            )
 
-        canonical_map = self._run_stage(
-            "canonicalize",
-            self._stage_fp(fp, gaz, f"threshold={canon_threshold}"),
-            lambda: canonicalize_surfaces(
-                mentions.select("surface"), threshold_pct=canon_threshold
-            ),
-        )
+            canonical_future = pool.submit(inheritable_thread_target(self.spark)(
+                lambda: self._run_stage(
+                    "canonicalize",
+                    self._stage_fp(fp, gaz, f"threshold={canon_threshold}"),
+                    lambda: canonicalize_surfaces(
+                        mentions.select("surface"), threshold_pct=canon_threshold
+                    ),
+                )
+            ))
 
-        linked = self._run_stage(
-            "link",
-            self._stage_fp(fp, gaz),
-            lambda: link_mentions(
-                mentions, kb_from_gazetteer(self.spark, self.gazetteer)
-            ).select(
-                "url", "surface", "label", "canonical", "start", "end",
-                "kb_id", "linked_name", "link_score",
-            ),
-        )
+            linked = self._run_stage(
+                "link",
+                self._stage_fp(fp, gaz),
+                lambda: link_mentions(
+                    mentions, kb_from_gazetteer(self.spark, self.gazetteer)
+                ).select(
+                    "url", "surface", "label", "canonical", "start", "end",
+                    "kb_id", "linked_name", "link_score",
+                ),
+            )
 
-        nodes = self._run_stage(
-            "nodes", self._stage_fp(fp, gaz), lambda: self._build_nodes(linked)
-        )
-        edges = self._run_stage(
-            "edges",
-            self._stage_fp(fp, gaz, tpl),
-            lambda: self._build_edges(triples, linked, nodes),
-        )
-        self._export_stage(nodes, edges, self._stage_fp(fp, gaz, tpl))
+            nodes = self._run_stage(
+                "nodes", self._stage_fp(fp, gaz), lambda: self._build_nodes(linked)
+            )
+            triples = triples_future.result()
+            edges = self._run_stage(
+                "edges",
+                self._stage_fp(fp, gaz, tpl),
+                lambda: self._build_edges(triples, linked, nodes),
+            )
+            self._export_stage(nodes, edges, self._stage_fp(fp, gaz, tpl))
+            canonical_future.result()
+
+        # declared order, whatever order the branches finished in
+        self.result.stages_run.sort(key=STAGES.index)
+        self.result.stages_skipped.sort(key=STAGES.index)
+        self.result.metrics = {
+            s: self.result.metrics[s] for s in STAGES if s in self.result.metrics
+        }
 
         # classify the run's stage-timing trend (constant/linear/exponential,
         # reference Export/Types.fs:179-208); stages are this engine's
@@ -291,15 +339,11 @@ class PagesPipeline:
         res = export_jsonl(nodes, edges, out, db_name="pages_kg")
         # the sink writes its own file; add a _SUCCESS marker for the ledger
         open(os.path.join(out, "_SUCCESS"), "w").close()
-        metrics = {
+        self._record(stage, fp, t0, {
             "rows": res.node_count + res.rel_count,
-            "seconds": round(time.perf_counter() - t0, 3),
             "partition_rows": [res.node_count, res.rel_count],
             "file": res.path,
-        }
-        self.ledger.mark_done(stage, fp, metrics)
-        self.result.stages_run.append(stage)
-        self.result.metrics[stage] = metrics
+        })
 
     # -- graph materialization ------------------------------------------------
 

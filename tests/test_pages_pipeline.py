@@ -9,10 +9,17 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from neo4j_export_tool_spark.plans.pages_pipeline import PagesPipeline, StageLedger
+from neo4j_export_tool_spark.operators import canonicalize
+from neo4j_export_tool_spark.plans import pages_pipeline
+from neo4j_export_tool_spark.plans.pages_pipeline import (
+    STAGES,
+    PagesPipeline,
+    StageLedger,
+)
 from neo4j_export_tool_spark.sources.synth import (
     GAZETTEER,
     ORGS,
+    PAGES_DDL,
     PERSONS,
     PLACES,
     RELATION_TEMPLATES,
@@ -163,6 +170,148 @@ def test_torn_ledger_entry_reruns_only_that_stage(spark, work_dir, first_run):
     assert _record_lines(export_file) == lines_before
 
 
+def _canonical_run(spark, work_dir):
+    pages = pages_spark_df(spark, N_DOCS, seed=SEED, partitions=4)
+    return PagesPipeline(
+        spark, work_dir, GAZETTEER, RELATION_TEMPLATES, SURFACES, resume=True
+    ).run(pages, fingerprint=f"synth:{N_DOCS}:{SEED}")
+
+
+def test_side_branch_error_raised_after_critical_path(
+    spark, work_dir, first_run, monkeypatch
+):
+    """A failing side branch (canonicalize) does not stop the critical path:
+    ``run`` raises its error at the join, every other stage is recorded,
+    the failed one is not, and a resume re-runs exactly that stage."""
+    _canonical_run(spark, work_dir)  # re-baseline the ledger
+    ledger = StageLedger(work_dir)
+    export_lines = lambda: _record_lines(ledger.read("export")["metrics"]["file"])  # noqa: E731
+    lines_before = export_lines()
+    # the critical-path stages that overlap canonicalize re-run beside it
+    for stage in ("canonicalize", "link", "nodes", "edges", "export"):
+        ledger.invalidate(stage)
+
+    def broken(*args, **kwargs):
+        raise RuntimeError("injected canonicalize failure")
+
+    monkeypatch.setattr(pages_pipeline, "canonicalize_surfaces", broken)
+    with pytest.raises(RuntimeError, match="injected canonicalize failure"):
+        _canonical_run(spark, work_dir)
+    assert ledger.read("canonicalize") is None
+    for stage in STAGES:
+        if stage != "canonicalize":
+            assert ledger.read(stage) is not None, stage
+    assert export_lines() == lines_before
+
+    monkeypatch.undo()
+    res = _canonical_run(spark, work_dir)
+    assert res.stages_run == ["canonicalize"]
+    assert export_lines() == lines_before
+
+
+def test_side_branch_jobs_inherit_job_group(spark, work_dir, first_run):
+    """The side branches' jobs, run on pool threads, carry the caller's job
+    group: the run starts no job outside it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    _canonical_run(spark, work_dir)  # re-baseline the ledger
+    ledger = StageLedger(work_dir)
+    ledger.invalidate("triples")
+    ledger.invalidate("canonicalize")
+    group = "test_pages_pipeline.side_branches"
+    drain()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "pipeline with side branches invalidated")
+    try:
+        res = _canonical_run(spark, work_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    drain()
+    assert res.stages_run == ["triples", "canonicalize"]
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+    assert tracker.getJobIdsForGroup(group)
+
+
+def test_canonicalize_loop_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """With the canonicalize branch's CC loop running (its contracted seed
+    is not the fixpoint) beside the critical path, nothing sets the
+    session's shuffle partitions, and link/nodes keep the partition counts
+    they get with no canonicalize beside them."""
+    import datetime as dt
+    import random
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    # one alias chain: 20-letter windows of a random string, 5 letters
+    # apart, so only neighbours pass the 40% trigram Jaccard threshold;
+    # spread over uncoalesced shuffle partitions, the partition-local
+    # stars disagree and the loop has to run
+    rng = random.Random(5)
+    seq = "".join(rng.choice("bcdfghjklmnpqrstvwxz") for _ in range(80))
+    chain = [seq[i:i + 20].capitalize() for i in range(0, 60, 5)]
+    gazetteer = {**GAZETTEER, **{s: ("Organization", s) for s in chain}}
+    ts = dt.datetime(2024, 1, 1)
+    chain_pages = spark.createDataFrame(
+        [
+            (f"https://chain.example/{i}", ts,
+             f"<html><body><p>{a} met {b}.</p></body></html>".encode(),
+             f"{a} met {b}.", "en")
+            for i, (a, b) in enumerate(zip(chain, chain[1:]))
+        ],
+        schema=PAGES_DDL,
+    )
+    pages = pages_spark_df(spark, 40, seed=SEED, partitions=4).unionByName(chain_pages)
+    work_dir = str(tmp_path)
+
+    def run():
+        return PagesPipeline(
+            spark, work_dir, gazetteer, RELATION_TEMPLATES, SURFACES, resume=True
+        ).run(pages, fingerprint="chain")
+
+    rounds = []
+    real_cc = canonicalize.connected_components
+
+    def recording_cc(*args, **kwargs):
+        res = real_cc(*args, **kwargs)
+        rounds.append(res.iterations)
+        return res
+
+    shuffle_sets = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        if key == "spark.sql.shuffle.partitions":
+            shuffle_sets.append(value)
+        return real_set(self, key, value)
+
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    old_coalesce = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        monkeypatch.setattr(canonicalize, "connected_components", recording_cc)
+        monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+        beside = run()
+        monkeypatch.undo()
+        # baseline: the same stages with canonicalize already done
+        ledger = StageLedger(work_dir)
+        for stage in ("link", "nodes", "edges", "export"):
+            ledger.invalidate(stage)
+        alone = run()
+    finally:
+        spark.conf.set(coalesce, old_coalesce)
+
+    assert len(beside.stages_run) == 8
+    assert rounds and rounds[0] >= 1, rounds
+    assert shuffle_sets == []
+    assert alone.stages_run == ["link", "nodes", "edges", "export"]
+    for stage in ("link", "nodes"):
+        assert len(beside.metrics[stage]["partition_rows"]) == len(
+            alone.metrics[stage]["partition_rows"]
+        ), stage
+
+
 def test_invalidated_stage_recomputes(spark, work_dir, first_run):
     ledger = StageLedger(work_dir)
     ledger.invalidate("triples")
@@ -233,3 +382,19 @@ def test_pipeline_performance_trend(first_run):
     assert perf["performance_trend"] in {
         "constant", "linear", "exponential", "insufficient_data",
     }
+
+
+def test_ledger_records_stage_schedule(first_run):
+    """Each stage's span (offsets from the start of ``run``) respects the
+    stage graph's dependency edges."""
+    m = first_run.metrics
+    for stage in STAGES:
+        assert 0 <= m[stage]["started_s"] <= m[stage]["ended_s"], stage
+    end = {stage: m[stage]["ended_s"] for stage in STAGES}
+    assert m["mentions"]["started_s"] >= end["extract"]
+    assert m["triples"]["started_s"] >= end["extract"]
+    assert m["canonicalize"]["started_s"] >= end["mentions"]
+    assert m["link"]["started_s"] >= end["mentions"]
+    assert m["nodes"]["started_s"] >= end["link"]
+    assert m["edges"]["started_s"] >= max(end["triples"], end["nodes"])
+    assert m["export"]["started_s"] >= end["edges"]
